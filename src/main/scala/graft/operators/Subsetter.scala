@@ -525,16 +525,6 @@ object Subsetter {
       rowCounts: Map[String, Long] = Map.empty,
       existing: Map[String, DataFrame] = Map.empty,
       existingClosed: Boolean = false): Map[String, DataFrame] = {
-
-    // dev profiling: GRAFT_SUBSET_TIMING=1 prints per-phase wall times
-    val timing = sys.env.get("GRAFT_SUBSET_TIMING").contains("1")
-    var t0 = System.nanoTime()
-    def phase(name: String): Unit = if (timing) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[subset] $name%-18s ${(t1 - t0) / 1e9}%6.2f s")
-      t0 = t1
-    }
-
     val included = tables.keys.toSeq.sorted
       .filterNot(t => globMatch(cfg.excludeTables, t))
 
@@ -584,7 +574,6 @@ object Subsetter {
       t -> sampled
     }.toMap
 
-    phase("seed")
     // 3. parent closure to fixpoint. When the caller vouches that
     // `existing` is already referentially closed (subsetDelta's default
     // — the reference's second run likewise assumes dest validity and
@@ -607,7 +596,6 @@ object Subsetter {
           k.values.map(_.select(lit(1).as("__m"))).reduce(_ union _).count()
         k
       } else parentClosure(tables, graph, seeds)
-    phase("closure")
 
     // 4–5. bounded child pull, then re-close parents (children may
     // demand parents not yet in the subset) — `childRounds` controls how
@@ -700,7 +688,6 @@ object Subsetter {
       keys = closureFrom(tables, graph, keys, deltas.toMap,
         materialize = pullRound < cfg.childRounds)
     }
-    phase("child-pull")
 
     // 6. completeness top-up — the reference's create_subset_in main
     // loop keeps pulling rows for the least-complete table until every
@@ -733,7 +720,6 @@ object Subsetter {
         .filter(_._2 > 0L).toMap
     }
     shortfalls = measure()
-    phase("measure-0")
     // topUpRounds < 0 = the reference's until-complete semantics: loop
     // while progress is possible (each round either fills a gap or
     // marks its source exhausted, so termination is guaranteed).
@@ -768,7 +754,6 @@ object Subsetter {
         keys = closureFrom(tables, graph, keys, deltas, materialize = false)
         shortfalls = measure()
       }
-      phase(s"topup-$round")
     }
 
     // 7. materialize rows (delta mode: only rows NOT already in dest)

@@ -630,30 +630,16 @@ object SimilarityQueries {
   // BOTH sides rather than risking cross-engine NaN ordering.
   // Recall@10 vs the float brute tier is spec-pinned; the brute shape
   // (broadcast queries, scan-bound candidates) is sim_topk's.
-  private val QuantScaleBits = 127
-
   def simTopkQuantized(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val de = SimilarityFunctions.toDoubleArr(col("embedding"))
-    val scale = e.agg(max(aggregate(de, lit(0.0),
-      (acc, x) => greatest(acc, abs(x)))).as("m"))
-    val sqNorm = (v: org.apache.spark.sql.Column) =>
-      sqrt(SimilarityFunctions.dotLongN(v, v).cast("double"))
-    val q = e.crossJoin(broadcast(scale))
-      .select(col("vec_id"),
-        transform(de, x => round(x / col("m") * QuantScaleBits, 0).cast("int")).as("qv"))
-      .withColumn("nrm", sqNorm(col("qv")))
-      .filter(col("nrm") > 0.0)
+    val q = SimilarityFunctions.int8Quantized(e, e,
+      SimilarityFunctions.toDoubleArr(col("embedding")))
     val qq = q.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("qid"), col("qv").as("qe"), col("nrm").as("qn"))
     val c = q.select(col("vec_id").as("cid"), col("qv").as("ce"), col("nrm").as("cn"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    c.join(broadcast(qq), col("qid") =!= col("cid"))
-      .withColumn("dot", SimilarityFunctions.dotLongN(col("qe"), col("ce")))
-      .withColumn("score", col("dot").cast("double") / (col("qn") * col("cn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 10)
-      .select(col("qid"), col("cid"), col("score"), col("rnk"))
+    SimilarityFunctions.topKPerQuery(c.join(broadcast(qq), col("qid") =!= col("cid"))
+        .withColumn("dot", SimilarityFunctions.dotLongN(col("qe"), col("ce")))
+        .withColumn("score", col("dot").cast("double") / (col("qn") * col("cn"))), 10)
       .orderBy("qid", "rnk")
   }
 
@@ -830,13 +816,9 @@ object SimilarityQueries {
       .select(col("vec_id").as("qid"), col("pe").as("qe"), col("nrm").as("qn"))
     val c = base.select(col("vec_id").as("cid"), col("pe").as("ce"),
       col("nrm").as("cn"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    c.join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("score",
-        SimilarityFunctions.dotN(col("qe"), col("ce")) / (col("qn") * col("cn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 10)
-      .select(col("qid"), col("cid"), col("score"), col("rnk"))
+    SimilarityFunctions.topKPerQuery(c.join(broadcast(q), col("qid") =!= col("cid"))
+        .withColumn("score",
+          SimilarityFunctions.dotN(col("qe"), col("ce")) / (col("qn") * col("cn"))), 10)
       .orderBy("qid", "rnk")
   }
 
@@ -897,7 +879,7 @@ object SimilarityQueries {
     * the rung's own plane count — same generator, more literals. */
   def dedupCosinePairs(s: SparkSession, dir: String): DataFrame =
     SimilarityFunctions.cosineLshPairsAuto(emb(s, dir),
-        nTables = CosTables, dim = 64, minCos = CosTau,
+        nTables = CosTables, minCos = CosTau,
         basePlanes = CosPlanes, targetBucket = 32,
         knownN = Some(embCount(s, dir)))
       .orderBy("ida", "idb")
@@ -958,7 +940,7 @@ object SimilarityQueries {
   def dedupCosineKeeper(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val pairs = SimilarityFunctions.cosineLshPairsAuto(e,
-        nTables = CosTables, dim = 64, minCos = CosTau,
+        nTables = CosTables, minCos = CosTau,
         basePlanes = CosPlanes, targetBucket = 32,
         knownN = Some(embCount(s, dir)))
       .select(col("ida").as("src"), col("idb").as("dst"))
@@ -1465,13 +1447,8 @@ object SimilarityQueries {
     val q = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("qid"), SimilarityFunctions.toDoubleArr(col("embedding")).as("qe"))
     val c = e.select(col("vec_id").as("cid"), SimilarityFunctions.toDoubleArr(col("embedding")).as("ce"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("score").desc, col("cid"))
-    c.join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("score", call_function("graft_cosine", col("qe"), col("ce")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 10)
-      .select(col("qid"), col("cid"), col("score"), col("rnk"))
+    SimilarityFunctions.topKPerQuery(c.join(broadcast(q), col("qid") =!= col("cid"))
+        .withColumn("score", call_function("graft_cosine", col("qe"), col("ce"))), 10)
       .orderBy("qid", "rnk")
   }
 
@@ -1522,12 +1499,12 @@ object SimilarityQueries {
 
   /** Hyperplane-LSH bucketed ANN; compares only within sign-bit
     * buckets. Stays at the literal 8-plane config by MEASURED
-    * decision (r12): the AnnTune grid showed plane sharpening
-    * collapsing candidate-gen recall on this near-orthogonal geometry
-    * (0.995 -> 0.845 -> 0.47 at 8/11/14 planes, hamming-2 probes), so
-    * this key is the gate-SF anchor; the declared SCALE path is the
-    * auto-plane twin `ann_lsh_topk_auto` (r13 verdict item 1) plus
-    * the IVF tier (k ~ sqrt(n), auto). */
+    * decision (r12): the plane-count grid recorded in SCALE.md showed
+    * plane sharpening collapsing candidate-gen recall on this
+    * near-orthogonal geometry (0.995 -> 0.845 -> 0.47 at 8/11/14
+    * planes, hamming-2 probes), so this key is the gate-SF anchor; the
+    * declared SCALE path is the auto-plane twin `ann_lsh_topk_auto`
+    * (r13 verdict item 1) plus the IVF tier (k ~ sqrt(n), auto). */
   def annLshTopk(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     SimilarityFunctions.annLshTopK(e.filter(col("vec_id") % 100 === 0), e, 10)
@@ -1556,9 +1533,16 @@ object SimilarityQueries {
   def annLshRecall(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val q = e.filter(col("vec_id") % 100 === 0)
-    val brute = bruteTopk(s, dir).select("qid", "cid")
-    val ann = SimilarityFunctions.annLshTopK(q, e, 10).select("qid", "cid")
-    val hits = ann.join(brute, Seq("qid", "cid"), "inner")
+    val brute = bruteTopk(s, dir)
+    recallVsBrute(SimilarityFunctions.annLshTopK(q, e, 10), brute)
+  }
+
+  /** The recall tail of the `ann_*_recall` probes: (brute_pairs, hits,
+    * recall) of an ANN tier's (qid, cid) top-k against the brute tier's
+    * on the same query set. */
+  private def recallVsBrute(ann: DataFrame, bruteTopK: DataFrame): DataFrame = {
+    val brute = bruteTopK.select("qid", "cid")
+    val hits = ann.select("qid", "cid").join(brute, Seq("qid", "cid"), "inner")
       .agg(count(lit(1)).as("hits"))
     brute.agg(count(lit(1)).as("brute_pairs"))
       .crossJoin(hits)
@@ -1597,16 +1581,16 @@ object SimilarityQueries {
     * table t the bucket is the sign fold over planes t·8+j (the exact
     * [[SimilarityFunctions.planeComponent]] doubles — Double.toString
     * round-trips, so DuckDB parses the identical IEEE value); probes
-    * XOR the C(8, ≤2) flip masks; exact cosine is the same sequential
-    * fold. Emits CTEs ending in `s(qid, cid, score)`; callers append
+    * XOR the C(8, ≤2) flip masks. `scoreCtes` scores the `cand(qid,
+    * cid)` pairs and must end in `s(qid, cid, score)`; callers append
     * their own guard + top-k window (the same (score DESC, cid)
     * tiebreak). `vSql` parameterizes the candidate corpus so the
     * hard-negative twin can plant exact-dup vectors. */
   private def annPortableCtes(vSql: String, anchorWhere: String,
+                              scoreCtes: String = annCosineScoreCtes,
                               candCap: Option[Int] = None,
                               tables: Int = AnnPortTables,
-                              probe: Int = AnnPortProbe,
-                              int8: Boolean = false): String = {
+                              probe: Int = AnnPortProbe): String = {
     def planeDot(j: Int): String =
       Det.sqlFoldChain(i => s"(e[$i] * ${SimilarityFunctions.planeComponent(j, i - 1)})", 64)
     def bucketExpr(t: Int): String =
@@ -1616,38 +1600,10 @@ object SimilarityQueries {
     val tableSelects = (0 until tables).map { t =>
       s"SELECT vec_id, $t AS tbl, ${bucketExpr(t)} AS bucket FROM v"
     }.mkString("\n  UNION ALL ")
-    val masks: Seq[Long] = (0 to probe).flatMap(h =>
-      (0 until AnnPortPlanes).combinations(h)
-        .map(_.foldLeft(0L)((m, i) => m | (1L << i))))
-    val dot = Det.sqlFoldChain(i => s"(vq.e[$i] * vc.e[$i])", 64)
-    val nq = Det.sqlFoldChain(i => s"(vq.e[$i] * vq.e[$i])", 64)
-    val nc = Det.sqlFoldChain(i => s"(vc.e[$i] * vc.e[$i])", 64)
+    val masks = SimilarityFunctions.probeMasks(AnnPortPlanes, probe)
     val capQ = candCap.map(c =>
       s"\n  QUALIFY row_number() OVER (PARTITION BY tbl, bucket ORDER BY vec_id) <= $c")
       .getOrElse("")
-    // int8 mode: the sim_topk_quantized scoring arithmetic grafted onto
-    // the portable candidate CTEs — global max-|component| scale,
-    // int8 quantize, exact BIGINT dot / integer norms; zero-norm
-    // vectors excluded on both sides (engine filters them identically)
-    val scoreCtes =
-      if (int8)
-        """mq AS (SELECT max(list_max(list_transform(e, x -> abs(x)))) AS m FROM v),
-          |qz AS (SELECT vec_id,
-          |         list_transform(e, x -> CAST(round(x / m * 127, 0) AS INTEGER)) AS qv
-          |       FROM v CROSS JOIN mq),
-          |qn AS (SELECT vec_id, qv,
-          |         sqrt(CAST(CAST(list_sum(list_transform(qv,
-          |           x -> CAST(x AS BIGINT) * x)) AS BIGINT) AS DOUBLE)) AS nrm
-          |       FROM qz),
-          |s AS (SELECT qid, cid,
-          |        CAST(CAST(list_sum(list_transform(range(1, 65),
-          |          i -> CAST(a.qv[i] AS BIGINT) * b.qv[i])) AS BIGINT) AS DOUBLE)
-          |          / (a.nrm * b.nrm) AS score
-          |      FROM cand JOIN qn a ON a.vec_id = qid JOIN qn b ON b.vec_id = cid
-          |      WHERE a.nrm > 0.0 AND b.nrm > 0.0)""".stripMargin
-      else
-        s"""s AS (SELECT qid, cid, $dot / (sqrt($nq) * sqrt($nc)) AS score
-           |      FROM cand JOIN v vq ON vq.vec_id = qid JOIN v vc ON vc.vec_id = cid)""".stripMargin
     s"""v AS ($vSql),
        |k AS (
        |  $tableSelects),
@@ -1660,6 +1616,36 @@ object SimilarityQueries {
        |                         AND c.vec_id <> p.qid),
        |$scoreCtes""".stripMargin
   }
+
+  /** Exact cosine of each candidate pair: the same sequential fold both
+    * engines replay bitwise. */
+  private def annCosineScoreCtes: String = {
+    val dot = Det.sqlFoldChain(i => s"(vq.e[$i] * vc.e[$i])", 64)
+    val nq = Det.sqlFoldChain(i => s"(vq.e[$i] * vq.e[$i])", 64)
+    val nc = Det.sqlFoldChain(i => s"(vc.e[$i] * vc.e[$i])", 64)
+    s"""s AS (SELECT qid, cid, $dot / (sqrt($nq) * sqrt($nc)) AS score
+       |      FROM cand JOIN v vq ON vq.vec_id = qid JOIN v vc ON vc.vec_id = cid)""".stripMargin
+  }
+
+  /** The sim_topk_quantized scoring arithmetic over the candidate
+    * pairs: global max-|component| scale, int8 quantize, exact BIGINT
+    * dot / integer norms; zero-norm vectors excluded on both sides (the
+    * engine's int8Quantized drops them identically). */
+  private def annInt8ScoreCtes: String =
+    """mq AS (SELECT max(list_max(list_transform(e, x -> abs(x)))) AS m FROM v),
+      |qz AS (SELECT vec_id,
+      |         list_transform(e, x -> CAST(round(x / m * 127, 0) AS INTEGER)) AS qv
+      |       FROM v CROSS JOIN mq),
+      |qn AS (SELECT vec_id, qv,
+      |         sqrt(CAST(CAST(list_sum(list_transform(qv,
+      |           x -> CAST(x AS BIGINT) * x)) AS BIGINT) AS DOUBLE)) AS nrm
+      |       FROM qz),
+      |s AS (SELECT qid, cid,
+      |        CAST(CAST(list_sum(list_transform(range(1, 65),
+      |          i -> CAST(a.qv[i] AS BIGINT) * b.qv[i])) AS BIGINT) AS DOUBLE)
+      |          / (a.nrm * b.nrm) AS score
+      |      FROM cand JOIN qn a ON a.vec_id = qid JOIN qn b ON b.vec_id = cid
+      |      WHERE a.nrm > 0.0 AND b.nrm > 0.0)""".stripMargin
 
   val annLshTopkPortableSql: String =
     s"""WITH ${annPortableCtes(
@@ -1700,9 +1686,9 @@ object SimilarityQueries {
   val annLshTopkInt8Sql: String =
     s"""WITH ${annPortableCtes(
         "SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings",
-        "k.vec_id % 100 = 0",
+        "k.vec_id % 100 = 0", annInt8ScoreCtes,
         candCap = Some(AnnInt8Cap),
-        tables = AnnInt8Tables, probe = AnnInt8Probe, int8 = true)}
+        tables = AnnInt8Tables, probe = AnnInt8Probe)}
        |SELECT qid, cid, score, CAST(rn AS INTEGER) AS rnk FROM (
        |  SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rn
        |  FROM s)
@@ -1797,15 +1783,9 @@ object SimilarityQueries {
   def annIvfRecall(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val q = e.filter(col("vec_id") % 100 === 0)
-    val brute = bruteTopk(s, dir).select("qid", "cid")
-    val ivf = SimilarityFunctions.annIvfTopK(q, e, 10,
-      trained = Some(ivfCentroidsMemo(s, dir, 16))).select("qid", "cid")
-    val hits = ivf.join(brute, Seq("qid", "cid"), "inner")
-      .agg(count(lit(1)).as("hits"))
-    brute.agg(count(lit(1)).as("brute_pairs"))
-      .crossJoin(hits)
-      .select(col("brute_pairs"), col("hits"),
-        (col("hits").cast("double") / col("brute_pairs").cast("double")).as("recall"))
+    val brute = bruteTopk(s, dir)
+    recallVsBrute(SimilarityFunctions.annIvfTopK(q, e, 10,
+      trained = Some(ivfCentroidsMemo(s, dir, 16))), brute)
   }
 
   /** The SCALE-SAFE hyperplane-LSH ANN tier as a declared query
@@ -1813,12 +1793,12 @@ object SimilarityQueries {
     * size via `autoPlanes` so bucket occupancy stays ~`targetBucket`
     * at ANY n — the property that makes the candidate join linear
     * instead of the literal-8 tier's quadratic drift (922.6 s at the
-    * sf10 rung vs 26.5 s for this plan, AnnLshScaleProbe / SCALE.md).
+    * sf10 rung vs 26.5 s for this plan, SCALE.md).
     * At the gate SFs (n ≤ 8192) `autoPlanes` sits at the 8-plane
     * floor, so this IS `ann_lsh_topk` bit-for-bit where the DuckDB
     * driver runs — the same exact/scale two-key pattern as the
     * editdist and ngram families. Plane sharpening costs recall only
-    * on clusterless geometry (AnnTune); on clustered corpora — the
+    * on clusterless geometry (SCALE.md); on clustered corpora — the
     * geometry real embeddings have — SimilaritySpec pins recall ≥ 0.9
     * at the auto width. Rows-only (§7-5, engine-seeded hyperplanes). */
   def annLshTopkAuto(s: SparkSession, dir: String): DataFrame = {
@@ -1835,16 +1815,9 @@ object SimilarityQueries {
   def annLshRecallAuto(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val q = e.filter(col("vec_id") % 100 === 0)
-    val brute = bruteTopk(s, dir).select("qid", "cid")
-    val ann = SimilarityFunctions.annLshTopKAuto(q, e, 10,
-        knownN = Some(embCount(s, dir)))
-      .select("qid", "cid")
-    val hits = ann.join(brute, Seq("qid", "cid"), "inner")
-      .agg(count(lit(1)).as("hits"))
-    brute.agg(count(lit(1)).as("brute_pairs"))
-      .crossJoin(hits)
-      .select(col("brute_pairs"), col("hits"),
-        (col("hits").cast("double") / col("brute_pairs").cast("double")).as("recall"))
+    val brute = bruteTopk(s, dir)
+    recallVsBrute(SimilarityFunctions.annLshTopKAuto(q, e, 10,
+      knownN = Some(embCount(s, dir))), brute)
   }
 
   /** Exact dedup with a 100 TB shuffle budget: group documents by an

@@ -472,7 +472,7 @@ class SimilaritySpec extends SparkSpecBase {
     // plant a near-duplicate of vector 0 (tiny perturbation)
     val nearDup = (500L, base.head._2.map(v => v + 0.01f))
     val e = (base :+ nearDup).toDF("vec_id", "embedding")
-    val got = cosineLshPairs(e, nTables = 4, planesPerTable = 6, dim = 16, minCos = 0.9)
+    val got = cosineLshPairs(e, nTables = 4, planesPerTable = 6, minCos = 0.9)
       .select("ida", "idb", "score").as[(Long, Long, Double)].collect()
     assert(got.exists { case (a, b, _) => a == 0L && b == 500L }) // planted dup found
     // every reported pair genuinely clears the threshold (verify step is exact)
@@ -755,12 +755,60 @@ class SimilaritySpec extends SparkSpecBase {
     val base = vecs.dropRight(1) :+ (99L, vecs.head._2.clone())
     val e = base.toDF("vec_id", "embedding")
     val q = e.filter($"vec_id" === 0L)
-    val ann = annLshTopK(q, e, 5, nPlanes = 8, dim = 8)
+    val ann = annLshTopK(q, e, 5, nPlanes = 8)
       .select("cid").as[Long].collect().toSet
     assert(ann.contains(99L)) // exact dup lands in same bucket, rank 1
     val exact = cosineTopK(q, e, 5).select("cid").as[Long].collect().toSet
     assert(ann.subsetOf(exact ++ ann)) // ann returns only real vectors
     assert((ann intersect exact).nonEmpty)
+  }
+
+  // --- the shared LSH candidate stage, through its three callers' knobs
+
+  /** 4-dim literal corpus: 0 is the anchor, 1 its exact copy and 2 a
+    * near copy (cosine 0.994); 10 quantizes to the zero vector under the
+    * global int8 scale m = 1. One table of 2 planes, probed at hamming 2,
+    * makes every corpus vector a candidate of every query. */
+  private def candidateCorpus = Seq(
+    0L -> Array(1f, 0f, 0f, 0f), 1L -> Array(1f, 0f, 0f, 0f),
+    2L -> Array(0.9f, 0.1f, 0f, 0f), 3L -> Array(0.7f, 0.7f, 0f, 0f),
+    4L -> Array(0.5f, -0.5f, 0.5f, 0f), 5L -> Array(0f, 1f, 0f, 0f),
+    6L -> Array(0.6f, 0f, 0.8f, 0f), 7L -> Array(0.3f, 0.2f, -0.9f, 0.1f),
+    8L -> Array(-1f, 0f, 0f, 0f), 9L -> Array(0.2f, 0.9f, 0.3f, 0.4f),
+    10L -> Array(1e-4f, 1e-4f, 1e-4f, 1e-4f), 11L -> Array(0.8f, 0.3f, 0.1f, 0.5f)
+  ).toDF("vec_id", "embedding")
+
+  test("LSH candidates: maxBucket enrolls exactly the lowest vec_ids of each bucket") {
+    val e = candidateCorpus
+    val byBucket = e.select($"vec_id", lshBucket($"embedding", 2, 4).as("b"))
+      .as[(Long, Long)].collect().groupBy(_._2).values.map(_.map(_._1).sorted)
+    assert(byBucket.exists(_.length > 1), "the cap must bite on the fixture")
+    val lowest = byBucket.map(_.head).toSet
+    val q = Seq(100L -> Array(0.5f, 0.5f, 0.5f, 0.5f)).toDF("vec_id", "embedding")
+    val got = annLshTopKPortable(q, e, 100, nTables = 1, planesPerTable = 2,
+        probeHamming = 2, maxBucket = Some(1))
+      .select("cid").as[Long].collect().toSet
+    assert(got == lowest)
+  }
+
+  test("LSH candidates: maxCos drops pairs before ranking, so all k slots fill") {
+    val e = candidateCorpus
+    val q = e.filter($"vec_id" === 0L)
+    val got = annLshTopKPortable(q, e, 3, nTables = 1, planesPerTable = 2,
+        probeHamming = 2, maxCos = Some(0.95))
+      .select("cid", "rnk").as[(Long, Int)].collect().toSet
+    val expected = cosineTopK(q, e.filter(!$"vec_id".isin(1L, 2L)), 3)
+      .select("cid", "rnk").as[(Long, Int)].collect().toSet
+    assert(got.size == 3 && got == expected)
+  }
+
+  test("int8 LSH: a vector quantized to zero norm is neither query nor candidate") {
+    val e = candidateCorpus
+    val got = annLshTopKInt8(e.filter($"vec_id".isin(0L, 10L)), e, 100,
+        nTables = 1, planesPerTable = 2, probeHamming = 2)
+      .select("qid", "cid").as[(Long, Long)].collect()
+    assert(got.map(_._1).toSet == Set(0L))
+    assert(got.map(_._2).toSet == (1L to 11L).toSet - 10L)
   }
 
   // --- r12 scale knobs (VERDICT r11 item 1) ----------------------------
@@ -782,9 +830,9 @@ class SimilaritySpec extends SparkSpecBase {
   test("cosineLshPairsAuto == cosineLshPairs(8) on the gate corpus") {
     val e = Catalog.table(spark, "/root/testdata/sf0.01", "embeddings")
     val fixed = cosineLshPairs(e, nTables = 4, planesPerTable = 8,
-        dim = 64, minCos = 0.35)
+        minCos = 0.35)
       .as[(Long, Long, Double)].collect().toSet
-    val auto = cosineLshPairsAuto(e, nTables = 4, dim = 64, minCos = 0.35)
+    val auto = cosineLshPairsAuto(e, nTables = 4, minCos = 0.35)
       .as[(Long, Long, Double)].collect().toSet
     assert(auto == fixed,
       "auto plane knob must be bit-identical to the literal-8 oracle at gate SFs")
@@ -804,8 +852,8 @@ class SimilaritySpec extends SparkSpecBase {
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(auto == fixed,
       "auto ANN-LSH must be bit-identical to the literal-8 tier at gate SFs")
-    // wider-plane path still runs end-to-end (recall trade measured in
-    // AnnTune — see annLshTopKAuto scaladoc for why it isn't default)
+    // wider-plane path still runs end-to-end (recall trade recorded in
+    // SCALE.md — see annLshTopKAuto scaladoc for why it isn't default)
     assert(annLshTopK(q, e, 10, nPlanes = 11).count() > 0)
   }
 
@@ -1100,7 +1148,7 @@ class SimilaritySpec extends SparkSpecBase {
 
   test("auto-plane LSH on clustered geometry: recall >= 0.9 ABOVE the plane floor") {
     // The declared scale tier (ann_lsh_topk_auto, r13 verdict item 1)
-    // sharpens planes as n grows; AnnTune measured that costing recall
+    // sharpens planes as n grows; SCALE.md records that costing recall
     // only on near-orthogonal geometry. On the clustered fixture — the
     // geometry real embedding corpora have — recall must hold at the
     // widened count. n = 12288 -> autoPlanes = 9 (> the 8-plane floor),

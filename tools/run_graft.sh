@@ -3,7 +3,7 @@
 # build.sbt's javaOptions. Usage:
 #   SPARK_DRIVER_MEM=24g tools/run_graft.sh graft.GenData 10.0 target/gen/sf10
 set -euo pipefail
-cd /root/repo
+cd "$(dirname "$0")/.."
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
